@@ -10,14 +10,17 @@ ingestion.
 Layout (see SURVEY.md §7):
     session.py     SparkSession factory (AQE on, Arrow on, UTC, decimal-safe)
     catalog.py     testdata + reference-shaped schemas, table loading
-    ops/           operator library (clean/dates/money/keys/joins/dedup/merge/agg)
-    io_/           sources, sinks, incremental file queue
-    llm/           large-scale training-data ops (dedup, similarity, text, multimodal)
-    streaming/     windowed aggregation + file-queue streaming
+    ops/           operator library (clean/dates/keys/joins/dedup/merge/agg,
+                   text/LSH/ANN/quality curation ops, the composed gate)
+    io/            sources, sinks, incremental file queue, versioned tables
+    streaming/     streaming sources, windowed aggregation, foreachBatch sinks
     validate.py    DataFrame-native data-quality validator
     generate.py    seeded synthetic generators (reference-shaped star schema)
     pipeline.py    ordered step graphs (the reference's 4 DAGs as code)
-    registry.py    driver-facing query registry (Spark callable + DuckDB oracle SQL)
+    pipelines/     the named retail pipelines built on pipeline.py
+    plan.py        physical-plan inspection helpers
+    registry/      driver-facing query registry (Spark callable + DuckDB
+                   oracle SQL), one module per domain
 """
 
 __version__ = "0.1.0"

@@ -28,8 +28,8 @@ def get_spark(
     app_name: str = "dynamic-etl-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    env_conf = _env_conf(os.environ.get("SPARK_GRAFT_EXTRA_CONF", ""))
     cpus = default_parallelism()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(
@@ -51,17 +51,8 @@ def get_spark(
         # has no native type for; read as long and convert in the catalog.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    for key, value in (extra_conf or {}).items():
+    for key, value in env_conf:
         builder = builder.config(key, value)
-    # Scale-dependent overrides without code edits (e.g. shuffle codec,
-    # join-strategy preference, advisory partition size on a real
-    # cluster): `SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"`. Local defaults
-    # stay exactly as above so bench numbers remain driver-comparable;
-    # production values belong in the deployment environment.
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for pair in filter(None, (p.strip() for p in env_conf.split(";"))):
-        key, _, value = pair.partition("=")
-        builder = builder.config(key.strip(), value.strip())
     spark = builder.getOrCreate()
     # getOrCreate silently ignores builder configs when a session already
     # exists in the process. The runtime-settable invariants (UTC timezone is
@@ -73,6 +64,25 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     _silence_bounded_window_warning(spark)
     return spark
+
+
+def _env_conf(spec: str) -> list[tuple[str, str]]:
+    """Scale-dependent overrides without code edits (e.g. shuffle codec,
+    join-strategy preference, advisory partition size on a real
+    cluster): ``SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"``. Local defaults
+    stay exactly as in :func:`get_spark` so bench numbers remain
+    driver-comparable; production values belong in the deployment
+    environment. A non-empty pair without ``=`` is refused — a typo must
+    not set a conf to the empty string."""
+    pairs = []
+    for pair in filter(None, (p.strip() for p in spec.split(";"))):
+        key, sep, value = pair.partition("=")
+        if not sep or not key.strip():
+            raise ValueError(
+                f"SPARK_GRAFT_EXTRA_CONF: {pair!r} is not a key=value pair"
+            )
+        pairs.append((key.strip(), value.strip()))
+    return pairs
 
 
 def _silence_bounded_window_warning(spark: SparkSession) -> None:

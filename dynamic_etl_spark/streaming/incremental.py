@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
 def file_stream(
@@ -130,16 +130,29 @@ def run_available_now(
 ) -> StreamingQuery:
     """Drain everything currently pending, then stop (the reference's
     daily-batch cadence with streaming exactly-once bookkeeping). Blocks
-    until the drain completes."""
+    until the drain completes; raises ``TimeoutError`` (see :func:`drain`)
+    if it does not within ``timeout_sec``."""
     writer = (
         df.writeStream.format(fmt)
         .outputMode(output_mode)
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
     )
     if path is not None:
         writer = writer.option("path", path)
-    query = writer.start()
-    query.awaitTermination(timeout_sec)
+    return drain(writer, timeout_sec, f"streaming query {query_name!r}")
+
+
+def drain(writer: DataStreamWriter, timeout_sec: float, what: str) -> StreamingQuery:
+    """Start ``writer`` under ``Trigger.AvailableNow`` and block until it
+    has processed everything pending and stopped. A drain that does not
+    finish within ``timeout_sec`` raises ``TimeoutError`` — the query is
+    left running, so the caller can wait longer or ``stop()`` it (it is
+    listed in ``spark.streams.active``)."""
+    query = writer.trigger(availableNow=True).start()
+    if not query.awaitTermination(timeout_sec):
+        raise TimeoutError(
+            f"{what} did not drain within {timeout_sec}s; the query is "
+            f"still running — raise timeout_sec or stop() it"
+        )
     return query

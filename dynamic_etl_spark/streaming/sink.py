@@ -1,32 +1,158 @@
-"""Streaming MERGE sink: the reference's incremental-load-then-MERGE
-cycle (scripts2/load_fact_sales_dw.py:65-77 one file per run, 299-416
-MERGE into the warehouse table) as a single Structured Streaming query.
+"""Streaming sinks: each micro-batch of a Structured Streaming query is
+applied to persistent state by a ``foreachBatch`` function and the
+stream is drained with ``Trigger.AvailableNow`` (the repository's batch
+cadence; remove the trigger for a continuous deployment).
 
 ``foreachBatch`` is Spark's blessed escape hatch for sinks that need
-batch-only operations (here: a full-outer MERGE rewrite + atomic table
-swap) — each micro-batch arrives exactly-once as a batch DataFrame
-together with a ``batch_id`` the checkpoint tracks, so a crashed batch
-is re-delivered with the same id and the sink stays idempotent as long
-as re-applying the same delta is (an SCD-1 merge is: re-merging already-
-merged rows classifies NOOP).
+batch-only operations — each micro-batch arrives exactly-once as a batch
+DataFrame together with a ``batch_id`` the checkpoint tracks, so a
+crashed batch is re-delivered with the same id and the sink stays
+correct as long as re-applying it is (by idempotence, or by the
+batch-id commit record).
 
-At scale the same topology targets a Delta/Iceberg ``MERGE INTO`` in the
-batch function; on plain parquet it rewrites via the staging+swap
-protocol (io/sinks.write_staging_swap, crash-safe).
+- :func:`run_streaming_merge` is the reference's incremental-load-then-
+  MERGE cycle (scripts2/load_fact_sales_dw.py:65-77 one file per run,
+  299-416 MERGE into the warehouse table): it rewrites a plain parquet
+  table through the crash-safe staging+swap protocol
+  (io/sinks.write_staging_swap). At scale the batch function targets a
+  Delta/Iceberg ``MERGE INTO`` instead.
+- every other sink keeps its state in ``io.versioned`` tables through
+  :class:`_Versioned`: read the newest snapshot (or start from an empty
+  frame), commit each new snapshot with the version it was read at as
+  the optimistic-concurrency base, so a concurrent writer's commit is
+  detected (``ConcurrentWriteError``), never overwritten.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from dynamic_etl_spark.io import versioned
 from dynamic_etl_spark.io.sinks import write_staging_swap
 from dynamic_etl_spark.ops.dedup import dedup_keep_last_agg
 from dynamic_etl_spark.ops.keys import assign_surrogate_keys
 from dynamic_etl_spark.ops.merge import scd1_merge
+from dynamic_etl_spark.streaming.incremental import drain
+
+
+def _drain(
+    stream_df: DataFrame, apply, checkpoint_dir: str, timeout_sec: float, what: str
+) -> StreamingQuery:
+    """Run ``apply(batch_df, batch_id)`` on every pending micro-batch
+    and block until the stream has drained (streaming/incremental.drain)."""
+    writer = stream_df.writeStream.foreachBatch(apply).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    return drain(writer, timeout_sec, what)
+
+
+class _Versioned:
+    """One ``io.versioned`` state table as a micro-batch sees it: ``df``
+    is the snapshot read at ``version`` — or ``empty.limit(0)`` when the
+    table does not exist yet, so a bootstrap is the same code path as
+    any batch, against an empty read. Every commit names the version
+    this frame was read at (then the batch's own last commit) as its
+    optimistic-concurrency base: a commit by any other writer in
+    between raises ``ConcurrentWriteError`` instead of being silently
+    overwritten.
+
+    ``io.versioned`` functions are looked up on the module at call time,
+    so wrappers installed on the module (tracing) see every read and
+    commit."""
+
+    def __init__(self, root: str, empty: DataFrame):
+        self.root = root
+        self.version = versioned.latest_version(root)
+        if self.version is None:
+            self.df = empty.limit(0)
+        else:
+            self.df = versioned.read_versioned(
+                empty.sparkSession, root, self.version
+            )
+
+    def commit(self, df: DataFrame, metadata: dict | None = None) -> None:
+        """Commit ``df`` as the table's next snapshot."""
+        self.version = versioned.write_versioned(
+            df, self.root, base_version=self.version, expected_base=True,
+            metadata=metadata,
+        )
+        self.df = df
+
+    def append(self, delta: DataFrame) -> None:
+        """Commit ``df ∪ delta``; an empty delta commits nothing."""
+        if not delta.isEmpty():
+            self.commit(self.df.unionByName(delta))
+
+
+def _heal(
+    store: _Versioned,
+    corpus: DataFrame,
+    id_col: str,
+    rows: Callable[[DataFrame], DataFrame],
+) -> None:
+    """Self-heal a per-doc store against the committed corpus: corpus
+    docs missing from the store (the corpus-committed/store-crashed
+    window, or a corpus advanced outside the sink) get their store rows
+    recomputed by ``rows`` and committed. The probe is an id-only
+    anti-join — normally empty, cheap next to the admission joins."""
+    unhealed = corpus.join(store.df.select(id_col).distinct(), id_col, "left_anti")
+    if not unhealed.isEmpty():
+        store.commit(store.df.unionByName(rows(unhealed)))
+
+
+def _frozen_centers(
+    root: str,
+    corpus: DataFrame,
+    batch: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_cells: int,
+    seed: int,
+    max_iter: int,
+):
+    """The frozen semantic fit: read it from ``root``, or fit it once —
+    on the corpus's embedded docs if there are any (a replayed bootstrap
+    must refit on the same rows; a corpus seeded outside the sink gets
+    its fit from what it holds), else on the batch's — and commit it
+    BEFORE any state that depends on it. None while no embedded doc has
+    been seen."""
+    from dynamic_etl_spark.ops.ann import (
+        centers_from_rows,
+        centers_to_rows,
+        fit_semantic_centers,
+    )
+
+    if versioned.latest_version(root) is not None:
+        return centers_from_rows(
+            versioned.read_versioned(corpus.sparkSession, root)
+        )
+    for source in (corpus, batch):
+        embedded = source.filter(F.col(vec_col).isNotNull())
+        if not embedded.isEmpty():
+            centers = fit_semantic_centers(
+                embedded, id_col, vec_col, n_cells, seed, max_iter
+            )
+            versioned.write_versioned(
+                centers_to_rows(corpus.sparkSession, centers), root
+            )
+            return centers
+    return None
+
+
+def _positive_norm(vec_col: str):
+    """Zero-norm (or empty) embeddings can never match anything."""
+    from dynamic_etl_spark.ops.ann import as_double_vec
+
+    return (
+        F.aggregate(
+            as_double_vec(F.col(vec_col)), F.lit(0.0), lambda acc, x: acc + x * x
+        )
+        > 0.0
+    )
 
 
 def run_streaming_merge(
@@ -122,18 +248,7 @@ def run_streaming_merge(
         # before any rename touches final_path
         write_staging_swap(merged, table_path)
 
-    query = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(timeout_sec):
-        raise TimeoutError(
-            f"streaming merge did not drain within {timeout_sec}s; the "
-            f"query is still running — raise timeout_sec or stop() it"
-        )
-    return query
+    return _drain(stream_df, _apply, checkpoint_dir, timeout_sec, "streaming merge")
 
 
 def run_streaming_dedup(
@@ -166,19 +281,14 @@ def run_streaming_dedup(
     probe is an id-only anti-join (normally empty) — cheap relative to
     the admission joins.
 
-    Bootstraps an absent corpus from the first batch (admission against
-    an empty corpus still deduplicates WITHIN the batch). Drains with
+    An absent corpus or store reads as empty, so the first batch
+    bootstraps both through the same admission (against an empty corpus
+    it still deduplicates WITHIN the batch). Drains with
     ``Trigger.AvailableNow`` and blocks, per the repo batch-cadence
     convention.
     """
-    from dynamic_etl_spark.io.versioned import (
-        latest_version,
-        read_versioned,
-        write_versioned,
-    )
     from dynamic_etl_spark.ops.lsh import incremental_near_dup_merge, minhash_banded_rows
-
-    spark = stream_df.sparkSession
+    from dynamic_etl_spark.ops.text import tokens
 
     def _sigs(docs: DataFrame) -> DataFrame:
         return minhash_banded_rows(
@@ -186,8 +296,6 @@ def run_streaming_dedup(
         )
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        from dynamic_etl_spark.ops.text import tokens
-
         # zero-token docs can never collide (no shingles -> no signature
         # rows), so admitting them would break BOTH invariants this sink
         # maintains: every corpus doc has store signatures (the heal
@@ -199,64 +307,18 @@ def run_streaming_dedup(
         )
         if batch_df.isEmpty():
             return
-        if latest_version(corpus_root) is None:
-            empty = spark.createDataFrame([], batch_df.schema)
-            out = incremental_near_dup_merge(
-                empty, batch_df, id_col, text_col,
-                threshold=threshold, num_hashes=num_hashes,
-                bands=bands, shingle_k=shingle_k,
-                existing_banded=_sigs(empty),
-            )
-            write_versioned(out["accepted"], corpus_root)
-            write_versioned(out["new_banded"], store_root)
-            return
-
-        corpus = read_versioned(spark, corpus_root)
-        # a crash between the bootstrap's two commits leaves a corpus
-        # with NO store at all — the widest corpus-committed/
-        # store-crashed window; start the heal from an empty store
-        # instead of failing the stream on read (review r4)
-        if latest_version(store_root) is None:
-            store = spark.createDataFrame([], _sigs(corpus.limit(0)).schema)
-        else:
-            store = read_versioned(spark, store_root)
-        unhealed = corpus.join(
-            store.select(id_col).distinct(), id_col, "left_anti"
-        )
-        if not unhealed.isEmpty():
-            store = store.unionByName(_sigs(unhealed))
-            write_versioned(
-                store, store_root,
-                base_version=latest_version(store_root), expected_base=True,
-            )
+        corpus = _Versioned(corpus_root, batch_df)
+        store = _Versioned(store_root, _sigs(batch_df))
+        _heal(store, corpus.df, id_col, _sigs)
         out = incremental_near_dup_merge(
-            corpus, batch_df, id_col, text_col,
+            corpus.df, batch_df, id_col, text_col,
             threshold=threshold, num_hashes=num_hashes,
-            bands=bands, shingle_k=shingle_k, existing_banded=store,
+            bands=bands, shingle_k=shingle_k, existing_banded=store.df,
         )
-        if out["accepted"].isEmpty():
-            return
-        write_versioned(
-            corpus.unionByName(out["accepted"]), corpus_root,
-            base_version=latest_version(corpus_root), expected_base=True,
-        )
-        write_versioned(
-            store.unionByName(out["new_banded"]), store_root,
-            base_version=latest_version(store_root), expected_base=True,
-        )
+        corpus.append(out["accepted"])
+        store.append(out["new_banded"])
 
-    query = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(timeout_sec):
-        raise TimeoutError(
-            f"streaming dedup did not drain within {timeout_sec}s; the "
-            f"query is still running — raise timeout_sec or stop() it"
-        )
-    return query
+    return _drain(stream_df, _apply, checkpoint_dir, timeout_sec, "streaming dedup")
 
 
 def run_streaming_semantic_dedup(
@@ -285,13 +347,14 @@ def run_streaming_semantic_dedup(
 
     State is THREE tables, committed in dependency order so every crash
     window heals forward:
-    - ``centers_root`` (cell, center): fitted ONCE on the bootstrap
-      batch and never rewritten — the frozen fit is what makes
+    - ``centers_root`` (cell, center): fitted ONCE — on the committed
+      corpus if there is one, else on the first batch (the curation
+      sink's rule) — and never rewritten: the frozen fit is what makes
       admission independent of arrival order. Committed FIRST; a
       centers-committed/corpus-crashed window re-bootstraps under the
-      already-committed fit instead of refitting on a different batch.
-      A corpus-committed/centers-crashed window (legacy seeding) refits
-      deterministically from the committed corpus.
+      already-committed fit instead of refitting on a different batch,
+      and a corpus seeded outside the sink gets a deterministic fit
+      from what it holds.
     - ``corpus_root``: the admitted documents. Committed second.
     - ``store_root`` (id, vec, cell): the admission probe target.
       Committed last; every batch starts by SELF-HEALING it — corpus
@@ -309,110 +372,37 @@ def run_streaming_semantic_dedup(
     Drains with ``Trigger.AvailableNow`` and blocks, per the repo
     batch-cadence convention.
     """
-    from dynamic_etl_spark.io.versioned import (
-        latest_version,
-        read_versioned,
-        write_versioned,
-    )
     from dynamic_etl_spark.ops.ann import (
-        as_double_vec,
-        centers_from_rows,
-        centers_to_rows,
-        fit_semantic_centers,
         incremental_semantic_merge,
         semantic_store_rows,
     )
 
-    spark = stream_df.sparkSession
-
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, vec_col).filter(
-            F.aggregate(
-                as_double_vec(F.col(vec_col)),
-                F.lit(0.0),
-                lambda acc, x: acc + x * x,
-            )
-            > 0.0
-        )
+        batch_df = batch_df.select(id_col, vec_col).filter(_positive_norm(vec_col))
         if batch_df.isEmpty():
             return
-        if latest_version(corpus_root) is None:
-            # bootstrap: freeze the fit on the first batch — unless a
-            # centers-committed/corpus-crashed window already froze one
-            if latest_version(centers_root) is None:
-                centers = fit_semantic_centers(
-                    batch_df, id_col, vec_col, n_cells, seed, max_iter
-                )
-                write_versioned(centers_to_rows(spark, centers), centers_root)
-            else:
-                centers = centers_from_rows(read_versioned(spark, centers_root))
-            empty = spark.createDataFrame([], batch_df.schema)
-            out = incremental_semantic_merge(
-                empty, batch_df, id_col, vec_col,
-                threshold=threshold, n_cells=n_cells, n_probe=n_probe,
-                seed=seed, centers=centers,
-                existing_assigned=semantic_store_rows(
-                    empty, id_col, vec_col, centers
-                ),
-            )
-            write_versioned(out["accepted"], corpus_root)
-            write_versioned(out["new_assigned"], store_root)
-            return
-
-        corpus = read_versioned(spark, corpus_root)
-        # a corpus seeded outside this sink (or a crash before the
-        # bootstrap's centers commit under older ordering) has no fit:
-        # refit deterministically from the committed corpus and freeze
-        if latest_version(centers_root) is None:
-            centers = fit_semantic_centers(
-                corpus, id_col, vec_col, n_cells, seed, max_iter
-            )
-            write_versioned(centers_to_rows(spark, centers), centers_root)
-        else:
-            centers = centers_from_rows(read_versioned(spark, centers_root))
-        if latest_version(store_root) is None:
-            store = semantic_store_rows(corpus.limit(0), id_col, vec_col, centers)
-        else:
-            store = read_versioned(spark, store_root)
-        unhealed = corpus.join(
-            store.select(id_col).distinct(), id_col, "left_anti"
+        corpus = _Versioned(corpus_root, batch_df)
+        centers = _frozen_centers(
+            centers_root, corpus.df, batch_df, id_col, vec_col,
+            n_cells, seed, max_iter,
         )
-        if not unhealed.isEmpty():
-            store = store.unionByName(
-                semantic_store_rows(unhealed, id_col, vec_col, centers)
-            )
-            write_versioned(
-                store, store_root,
-                base_version=latest_version(store_root), expected_base=True,
-            )
+
+        def _rows(docs: DataFrame) -> DataFrame:
+            return semantic_store_rows(docs, id_col, vec_col, centers)
+
+        store = _Versioned(store_root, _rows(batch_df))
+        _heal(store, corpus.df, id_col, _rows)
         out = incremental_semantic_merge(
-            corpus, batch_df, id_col, vec_col,
+            corpus.df, batch_df, id_col, vec_col,
             threshold=threshold, n_cells=n_cells, n_probe=n_probe,
-            seed=seed, centers=centers, existing_assigned=store,
+            seed=seed, centers=centers, existing_assigned=store.df,
         )
-        if out["accepted"].isEmpty():
-            return
-        write_versioned(
-            corpus.unionByName(out["accepted"]), corpus_root,
-            base_version=latest_version(corpus_root), expected_base=True,
-        )
-        write_versioned(
-            store.unionByName(out["new_assigned"]), store_root,
-            base_version=latest_version(store_root), expected_base=True,
-        )
+        corpus.append(out["accepted"])
+        store.append(out["new_assigned"])
 
-    query = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        stream_df, _apply, checkpoint_dir, timeout_sec, "streaming semantic dedup"
     )
-    if not query.awaitTermination(timeout_sec):
-        raise TimeoutError(
-            f"streaming semantic dedup did not drain within {timeout_sec}s; "
-            f"the query is still running — raise timeout_sec or stop() it"
-        )
-    return query
 
 
 def run_streaming_curation(
@@ -446,9 +436,10 @@ def run_streaming_curation(
 ) -> StreamingQuery:
     """The THREE-TIER curation gate on a stream (VERDICT r9 #4): each
     micro-batch runs exact-fingerprint, banded-MinHash lexical, and
-    SemDeDup semantic admission — the composition of
-    registry/curation's maintained gate — against persistent versioned
-    stores, with per-doc tier attribution appended to a ledger table.
+    SemDeDup semantic admission — ops/gate.curation_gate, the same
+    composition registry/curation's maintained gate runs — against
+    persistent versioned stores, with per-doc tier attribution appended
+    to a ledger table.
 
     ``dsir_root`` (VERDICT r11 #4) enables the optional FOURTH tier:
     DSIR quality admission. The bucket-ratio table is FIT ONCE — on the
@@ -517,25 +508,10 @@ def run_streaming_curation(
     ``Trigger.AvailableNow`` and blocks, per the repo batch-cadence
     convention.
     """
-    from dynamic_etl_spark.io.versioned import (
-        latest_metadata,
-        latest_version,
-        read_versioned,
-        write_versioned,
-    )
-    from dynamic_etl_spark.ops.ann import (
-        as_double_vec,
-        centers_from_rows,
-        centers_to_rows,
-        fit_semantic_centers,
-        incremental_semantic_merge,
-        semantic_store_rows,
-    )
-    from dynamic_etl_spark.ops.lsh import (
-        incremental_near_dup_merge,
-        minhash_banded_rows,
-    )
-    from dynamic_etl_spark.ops.quality import dsir_bucket_ratios, dsir_gate
+    from dynamic_etl_spark.ops.ann import semantic_store_rows
+    from dynamic_etl_spark.ops.gate import curation_gate
+    from dynamic_etl_spark.ops.lsh import minhash_banded_rows
+    from dynamic_etl_spark.ops.quality import dsir_bucket_ratios
     from dynamic_etl_spark.ops.text import fingerprint_md5, tokens
 
     if dsir_root is not None and (dsir_target is None or dsir_min_log_weight is None):
@@ -545,23 +521,6 @@ def run_streaming_curation(
         )
 
     spark = stream_df.sparkSession
-
-    def _read_or(root: str, template: DataFrame) -> DataFrame:
-        if latest_version(root) is None:
-            return template.limit(0)
-        return read_versioned(spark, root)
-
-    def _append(root: str, current: DataFrame, delta: DataFrame) -> None:
-        if delta.isEmpty():
-            return
-        base = latest_version(root)
-        if base is None:
-            write_versioned(current.unionByName(delta), root)
-        else:
-            write_versioned(
-                current.unionByName(delta), root,
-                base_version=base, expected_base=True,
-            )
 
     def _fp_rows(docs: DataFrame) -> DataFrame:
         return docs.select(
@@ -574,42 +533,25 @@ def run_streaming_curation(
             hash_mode=hash_mode,
         )
 
-    def _heal(corpus: DataFrame, centers):
+    def _embedded(docs: DataFrame) -> DataFrame:
+        return docs.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col)
+
+    def _heal_all(corpus: DataFrame, centers):
         """Self-heal every store against the committed corpus; returns
-        the post-heal (fp_store, lex_store, sem_store) frames."""
-        fp_store = _read_or(fp_root, _fp_rows(corpus))
-        lex_store = _read_or(lex_root, _sigs(corpus.limit(0)))
-        unhealed_fp = corpus.join(
-            fp_store.select(id_col).distinct(), id_col, "left_anti"
-        )
-        if not unhealed_fp.isEmpty():
-            delta = _fp_rows(unhealed_fp)
-            _append(fp_root, fp_store, delta)
-            fp_store = fp_store.unionByName(delta)
-        unhealed_lex = corpus.join(
-            lex_store.select(id_col).distinct(), id_col, "left_anti"
-        )
-        if not unhealed_lex.isEmpty():
-            delta = _sigs(unhealed_lex)
-            _append(lex_root, lex_store, delta)
-            lex_store = lex_store.unionByName(delta)
-        sem_store = None
-        if vec_col is not None and centers is not None:
-            emb_corpus = corpus.filter(F.col(vec_col).isNotNull()).select(
-                id_col, vec_col
-            )
-            sem_store = _read_or(
-                sem_root,
-                semantic_store_rows(emb_corpus.limit(0), id_col, vec_col, centers),
-            )
-            unhealed_sem = emb_corpus.join(
-                sem_store.select(id_col).distinct(), id_col, "left_anti"
-            )
-            if not unhealed_sem.isEmpty():
-                healed = semantic_store_rows(unhealed_sem, id_col, vec_col, centers)
-                _append(sem_root, sem_store, healed)
-                sem_store = sem_store.unionByName(healed)
-        return fp_store, lex_store, sem_store
+        the (fp, lex, sem) tables — sem None without a semantic tier."""
+        fp = _Versioned(fp_root, _fp_rows(corpus))
+        lex = _Versioned(lex_root, _sigs(corpus))
+        _heal(fp, corpus, id_col, _fp_rows)
+        _heal(lex, corpus, id_col, _sigs)
+        if centers is None:
+            return fp, lex, None
+
+        def _rows(docs: DataFrame) -> DataFrame:
+            return semantic_store_rows(docs, id_col, vec_col, centers)
+
+        sem = _Versioned(sem_root, _rows(_embedded(corpus)))
+        _heal(sem, _embedded(corpus), id_col, _rows)
+        return fp, lex, sem
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         cols = [id_col, text_col] + ([vec_col] if vec_col else [])
@@ -617,64 +559,38 @@ def run_streaming_curation(
             F.size(tokens(F.col(text_col))) > 0
         )
         if vec_col is not None:
-            norm_ok = (
-                F.aggregate(
-                    as_double_vec(F.col(vec_col)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x * x,
-                )
-                > 0.0
-            )
             batch_df = batch_df.withColumn(
-                vec_col, F.when(norm_ok, F.col(vec_col))
+                vec_col, F.when(_positive_norm(vec_col), F.col(vec_col))
             )
         if batch_df.isEmpty():
             return
         # several tiers scan the batch; read the stream source once
         batch_df = batch_df.localCheckpoint()
 
-        corpus = _read_or(corpus_root, batch_df)
-
-        # frozen fit: read it, or freeze one on the first embedded docs
-        # seen (corpus first — a replayed bootstrap must refit on the
-        # same rows; batch otherwise) and commit it BEFORE any state
-        # that depends on it
+        corpus = _Versioned(corpus_root, batch_df)
         centers = None
         if vec_col is not None:
-            if latest_version(centers_root) is not None:
-                centers = centers_from_rows(read_versioned(spark, centers_root))
-            else:
-                fit_src = corpus.filter(F.col(vec_col).isNotNull())
-                if fit_src.isEmpty():
-                    fit_src = batch_df.filter(F.col(vec_col).isNotNull())
-                if not fit_src.isEmpty():
-                    centers = fit_semantic_centers(
-                        fit_src, id_col, vec_col, n_cells, seed, max_iter
-                    )
-                    write_versioned(centers_to_rows(spark, centers), centers_root)
+            centers = _frozen_centers(
+                centers_root, corpus.df, batch_df, id_col, vec_col,
+                n_cells, seed, max_iter,
+            )
 
-        recorded = -1
-        if latest_version(ledger_root) is not None:
-            recorded = latest_metadata(ledger_root).get("batch_id", -1)
-
+        recorded = versioned.latest_metadata(ledger_root).get("batch_id", -1)
         if batch_id <= recorded:
             # the ledger already decided this batch (crash after commit
             # window 1): finish the state from its attribution, never
             # recompute — then heal
-            ledger = read_versioned(spark, ledger_root)
-            admitted_ids = (
-                ledger.filter(
-                    (F.col("batch_id") == batch_id) & F.col("admitted")
-                )
+            admitted = (
+                versioned.read_versioned(spark, ledger_root)
+                .filter((F.col("batch_id") == batch_id) & F.col("admitted"))
                 .select(id_col)
             )
-            lost = batch_df.join(admitted_ids, id_col, "leftsemi").join(
-                corpus.select(id_col), id_col, "left_anti"
+            corpus.append(
+                batch_df.join(admitted, id_col, "leftsemi").join(
+                    corpus.df.select(id_col), id_col, "left_anti"
+                )
             )
-            if not lost.isEmpty():
-                _append(corpus_root, corpus, lost)
-                corpus = corpus.unionByName(lost)
-            _heal(corpus, centers)
+            _heal_all(corpus.df, centers)
             return
 
         # frozen DSIR ratio table: read it, or fit once (corpus first —
@@ -685,144 +601,57 @@ def run_streaming_curation(
         # application committed the fit before that ledger commit.
         ratios = None
         if dsir_root is not None:
-            if latest_version(dsir_root) is not None:
-                ratios = read_versioned(spark, dsir_root).localCheckpoint()
+            if versioned.latest_version(dsir_root) is not None:
+                ratios = versioned.read_versioned(spark, dsir_root).localCheckpoint()
             else:
-                fit_src = corpus if not corpus.isEmpty() else batch_df
+                fit_src = corpus.df if not corpus.df.isEmpty() else batch_df
                 ratios = dsir_bucket_ratios(
                     fit_src.select(id_col, text_col),
                     id_col=id_col, text_col=text_col,
                     target=dsir_target, n_buckets=dsir_buckets,
                 )
-                write_versioned(ratios, dsir_root)
+                versioned.write_versioned(ratios, dsir_root)
 
-        fp_store, lex_store, sem_store = _heal(corpus, centers)
-
-        # tier 1 — exact fingerprints vs the store, keep-min in batch
-        bfp = _fp_rows(batch_df)
-        keep1 = (
-            bfp.join(fp_store.select("__fp").distinct(), "__fp", "left_anti")
-            .groupBy("__fp")
-            .agg(F.min(id_col).alias(id_col))
-            .select(id_col)
+        fp, lex, sem = _heal_all(corpus.df, centers)
+        gate = curation_gate(
+            batch_df, corpus.df, id_col=id_col, text_col=text_col,
+            store_fp=fp.df.select("__fp").distinct(), lex_store=lex.df,
+            lex_threshold=lex_threshold, num_hashes=num_hashes, bands=bands,
+            shingle_k=shingle_k, hash_mode=hash_mode,
+            vec_col=vec_col if sem else None,
+            corpus_emb=_embedded(corpus.df) if sem else None,
+            centers=centers, sem_store=sem.df if sem else None,
+            sem_threshold=sem_threshold, n_cells=n_cells, n_probe=n_probe,
+            seed=seed, dsir_ratios=ratios,
+            dsir_min_log_weight=dsir_min_log_weight,
         )
-        s1 = batch_df.join(keep1, id_col, "leftsemi").localCheckpoint()
+        # the attribution is computed once: the ledger rows and the
+        # admitted set every state delta is filtered to both read it
+        ledger_delta = gate["attribution"].withColumn(
+            "batch_id", F.lit(batch_id).cast("long")
+        ).localCheckpoint()
+        admitted = ledger_delta.filter(F.col("admitted")).select(id_col)
 
-        # tier 2 — banded MinHash lexical admission vs the store
-        out2 = incremental_near_dup_merge(
-            corpus, s1, id_col, text_col,
-            threshold=lex_threshold, num_hashes=num_hashes, bands=bands,
-            shingle_k=shingle_k, existing_banded=lex_store,
-            hash_mode=hash_mode,
-        )
-        s2 = out2["accepted"].localCheckpoint()
-
-        # tier 3 — semantic admission vs the store; embedding-less
-        # survivors pass through (the composed gate's convention)
-        out3 = None
-        if vec_col is not None and centers is not None:
-            s2e = s2.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col)
-            emb_corpus = corpus.filter(F.col(vec_col).isNotNull()).select(
-                id_col, vec_col
-            )
-            out3 = incremental_semantic_merge(
-                emb_corpus, s2e, id_col, vec_col,
-                threshold=sem_threshold, n_cells=n_cells, n_probe=n_probe,
-                seed=seed, centers=centers, existing_assigned=sem_store,
-            )
-            no_emb = s2.filter(F.col(vec_col).isNull()).select(id_col)
-            admitted_ids = (
-                out3["accepted"].select(id_col).unionByName(no_emb)
-            )
-        else:
-            admitted_ids = s2.select(id_col)
-
-        # tier 4 — DSIR quality admission of the dedup survivors
-        # against the frozen ratio table (no per-doc store)
-        s3_ids = None
-        if ratios is not None:
-            s3_ids = admitted_ids.localCheckpoint()
-            gate = dsir_gate(
-                batch_df.join(s3_ids, id_col, "leftsemi").select(id_col, text_col),
-                ratios, id_col=id_col, text_col=text_col,
-                min_log_weight=dsir_min_log_weight,
-            )
-            admitted_ids = gate.filter(F.col("passes")).select(id_col)
-        admitted_ids = admitted_ids.localCheckpoint()
-
-        flag = lambda df, name: df.select(id_col, F.lit(True).alias(name))
-        attributed = (
-            batch_df.select(id_col)
-            .join(flag(s1, "__t1"), id_col, "left")
-            .join(flag(s2, "__t2"), id_col, "left")
-        )
-        quality_case = F.lit(None).cast("boolean")
-        if s3_ids is not None:
-            attributed = attributed.join(flag(s3_ids, "__t3"), id_col, "left")
-            quality_case = F.col("__t3")
-        ledger_delta = (
-            attributed
-            .join(flag(admitted_ids, "__adm"), id_col, "left")
-            .select(
-                id_col,
-                F.coalesce(F.col("__adm"), F.lit(False)).alias("admitted"),
-                F.when(F.coalesce(F.col("__adm"), F.lit(False)), F.lit("none"))
-                .when(F.coalesce(quality_case, F.lit(False)), F.lit("quality"))
-                .when(F.coalesce(F.col("__t2"), F.lit(False)), F.lit("semantic"))
-                .when(F.coalesce(F.col("__t1"), F.lit(False)), F.lit("lexical"))
-                .otherwise(F.lit("exact"))
-                .alias("rejected_by"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
-        )
         # commit window 1: the attribution ledger (the pivot)
-        ledger_current = _read_or(ledger_root, ledger_delta)
-        base = latest_version(ledger_root)
-        if base is None:
-            write_versioned(
-                ledger_delta, ledger_root, metadata={"batch_id": batch_id}
-            )
-        else:
-            write_versioned(
-                ledger_current.unionByName(ledger_delta), ledger_root,
-                base_version=base, expected_base=True,
-                metadata={"batch_id": batch_id},
-            )
+        ledger = _Versioned(ledger_root, ledger_delta)
+        ledger.commit(
+            ledger.df.unionByName(ledger_delta), metadata={"batch_id": batch_id}
+        )
         # commit window 2: the corpus
-        admitted_docs = batch_df.join(admitted_ids, id_col, "leftsemi")
-        _append(corpus_root, corpus, admitted_docs)
-        # commit window 3: the stores — every delta filtered to the
-        # FINAL admitted set
-        _append(fp_root, fp_store, bfp.join(admitted_ids, id_col, "leftsemi"))
-        _append(
-            lex_root, lex_store,
-            out2["new_banded"].join(admitted_ids, id_col, "leftsemi"),
-        )
-        if out3 is not None and sem_store is not None:
-            # filtered to the FINAL admitted set like the fp/lex deltas
-            # (ADVICE r12 #1): with the DSIR fourth tier active, tier 4
-            # can reject a doc tier 3 accepted — an unfiltered semantic
-            # delta would permanently store the quality-reject's
-            # embedding (_heal only adds rows) and later batches would
-            # reject near docs as 'semantic' against a doc absent from
-            # the corpus, breaking batch-vs-stream admission parity
-            _append(
-                sem_root, sem_store,
-                out3["new_assigned"].join(admitted_ids, id_col, "leftsemi"),
-            )
+        corpus.append(batch_df.join(admitted, id_col, "leftsemi"))
+        # commit window 3: the stores — every delta filtered to the FINAL
+        # admitted set: a doc a later tier rejected must leave nothing
+        # behind (ADVICE r12 #1: a semantic-store entry for a DSIR reject
+        # would make later batches reject near docs as 'semantic' against
+        # a doc absent from the corpus — _heal only adds rows)
+        fp.append(gate["fingerprints"].join(admitted, id_col, "leftsemi"))
+        lex.append(gate["new_banded"].join(admitted, id_col, "leftsemi"))
+        if sem is not None:
+            sem.append(gate["new_assigned"].join(admitted, id_col, "leftsemi"))
 
-    query = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        stream_df, _apply, checkpoint_dir, timeout_sec, "streaming curation"
     )
-    if not query.awaitTermination(timeout_sec):
-        raise TimeoutError(
-            f"streaming curation did not drain within {timeout_sec}s; the "
-            f"query is still running — raise timeout_sec or stop() it"
-        )
-    return query
 
 
 def run_streaming_rollup(
@@ -900,43 +729,20 @@ def run_streaming_summary(
     Delta txn batch-id pattern; see its docstring for the crash cases
     and the one-checkpoint-one-state-table rule).
     """
-    from dynamic_etl_spark.io.versioned import (
-        latest_metadata,
-        latest_version,
-        read_versioned,
-        write_versioned,
-    )
-
-    spark = stream_df.sparkSession
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        current = latest_version(state_root)
-        if current is not None:
-            applied = latest_metadata(state_root).get("batch_id", -1)
-            if batch_id <= applied:
-                return  # checkpoint redelivery of an already-folded batch
+        applied = versioned.latest_metadata(state_root).get("batch_id", -1)
+        if batch_id <= applied:
+            return  # checkpoint redelivery of an already-folded batch
         delta = build(batch_df)
-        if current is None:
-            write_versioned(delta, state_root, metadata={"batch_id": batch_id})
-            return
-        merged = merge(read_versioned(spark, state_root), delta)
-        write_versioned(
-            merged, state_root,
-            base_version=current, expected_base=True,
+        state = _Versioned(state_root, delta)
+        state.commit(
+            delta if state.version is None else merge(state.df, delta),
             metadata={"batch_id": batch_id},
         )
 
-    query = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        stream_df, _apply, checkpoint_dir, timeout_sec, "streaming summary"
     )
-    if not query.awaitTermination(timeout_sec):
-        raise TimeoutError(
-            f"streaming summary did not drain within {timeout_sec}s; the "
-            f"query is still running — raise timeout_sec or stop() it"
-        )
-    return query

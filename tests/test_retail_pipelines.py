@@ -13,7 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from dynamic_etl_spark.pipelines import (
-
     dw_load_pipeline,
     extract_pipeline,
     generation_pipeline,
